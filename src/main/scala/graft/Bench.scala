@@ -186,6 +186,18 @@ object Bench {
       else Some(if (minLoad > LoadBar) "load" else "code")
     }
 
+  /** The `errors` object of bench_full.json: for each failed query,
+    * the class and message of the exception its last failed draw
+    * threw (a JSON null message when the exception carries none). */
+  private[graft] def errorsJson(errors: Seq[(String, Throwable)]): String = {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    errors.sortBy(_._1).map { case (name, e) =>
+      json.writeValueAsString(name) +
+        s""":{"class":${json.writeValueAsString(e.getClass.getName)},""" +
+        s""""message":${json.writeValueAsString(e.getMessage)}}"""
+    }.mkString("{", ",", "}")
+  }
+
   /** 1-minute loadavg at draw time (-1 if unreadable): recorded per
     * timing draw so round-over-round drift adjudication can cite the
     * host's actual load instead of narrative ("host noise" was argued
@@ -257,6 +269,8 @@ object Bench {
         (SparkEntry.queries.keySet & GroundTruthBaselines) -- only.getOrElse(Set.empty)
       else Set.empty
     val skipped: Set[String] = skippedNeg ++ skippedGt
+    // why each failed query failed: its last failed draw's exception
+    val errors = scala.collection.mutable.Map.empty[String, Throwable]
     val base0 = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) && !skipped.contains(n) }
       .map { case (name, fn) =>
@@ -265,7 +279,8 @@ object Bench {
       def timed(): Double = {
         loads += load1()
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => failed = true }
+        try { fn(spark, sfDir).count() }
+        catch { case e: Throwable => failed = true; errors(name) = e }
         (System.nanoTime() - t0) / 1e9
       }
       // the shared host's noise band is >2× (occasionally 10×): when
@@ -355,7 +370,7 @@ object Bench {
     val host = s"""{"jvms":${jvmCount()},"loadavg_end":${r2(load1())}}"""
     val skippedJson = skippedNeg.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val skippedGtJson = skippedGt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"host":$host,"drift":$driftJson,"failed":$failedNames,"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
+    val fullJson = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$fullQs,"samples":$fullSamples,"loadavg":$fullLoads,"host":$host,"drift":$driftJson,"failed":$failedNames,"errors":${errorsJson(errors.toSeq)},"skipped_kept_negatives":$skippedJson,"skipped_ground_truth":$skippedGtJson,"sf":"$sfDir","n_queries":${results.size}}"""
     Files.write(Paths.get(outFile), (fullJson + "\n").getBytes(StandardCharsets.UTF_8))
     // self-snapshot the round-over-round witness: a zero-failure run of
     // the FULL inventory at a tracked SF overwrites its snapshot file.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.DfCache
 import graft.functions.TextFunctions.tokens
 
 /** LEARNED byte-pair-encoding tokenization (`doc_chunk_bpe`, r17 —
@@ -100,18 +101,15 @@ object BpeTokenizer {
     syms
   }
 
-  /** Once-per-(JVM, corpus) memo of the learned merges: the learning
-    * loop is deterministic in the corpus, so re-learning per bench
-    * draw would only burn jobs. The memo is populated strictly AFTER
-    * the dump write, so the oracle's __BPEDIR__ read is always
-    * satisfied whenever a hit is served. */
-  private val learned =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-
   /** Learn [[NumMerges]] merges over the corpus and persist the
-    * ranked table to [[dumpDir]]/merges.parquet (rank, l, r). */
+    * ranked table to [[dumpDir]]/merges.parquet (rank, l, r).
+    * Memoized per (session, dir) under the documents stamp: the
+    * learning loop is deterministic in the corpus, so re-learning per
+    * bench draw would only burn jobs. The memo is populated strictly
+    * AFTER the dump write, so the oracle's __BPEDIR__ read is always
+    * satisfied whenever a hit is served. */
   private[graft] def learnMerges(s: SparkSession, dir: String): Seq[(String, String)] =
-    learned.getOrElseUpdate(dir, {
+    DfCache.memo(s, s"bpeMerges:$dir", Tables.stamp(dir, "documents")) {
       import s.implicits._
       val words = Tables.documents(s, dir)
         .select(explode(tokens(col("text"))).as("word"))
@@ -156,7 +154,7 @@ object BpeTokenizer {
         .write.mode("overwrite")
         .parquet(dumpDir(dir) + "/merges.parquet")
       merges.toSeq
-    })
+    }
 
   /** documents → BPE-budgeted chunks: learn (memoized) → cost each
     * DISTINCT word once → broadcast-join costs onto the token stream →

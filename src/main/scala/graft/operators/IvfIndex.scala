@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
-import graft.functions.FloatVecDistance
+import graft.functions.{DfCache, FloatVecDistance}
 
 /** IVF (inverted-file) approximate nearest neighbor — the Spark
   * re-expression of the reference's vector index
@@ -219,38 +219,12 @@ object IvfIndex {
     model.transform(emb.withColumn("features", array_to_vector(col("embedding"))))
       .select(col("vec_id"), col("embedding"), col("centroid_id"))
 
-  /** Assign every vector to its (cosine) nearest centroid; the
-    * returned frame is the index: repartitioned on centroid_id.
-    * Memoized per (session, dir, RESOLVED nlist): an index is a
-    * persistent artifact — refitting k-means for every query that
-    * probes it is an artifact of the per-query test harness, not the
-    * design. The key carries the resolved geometry, so `k = 0`
-    * (adaptive) and an explicit k equal to the adaptive default hit
-    * the same entry — an identical geometry is never fit twice.
-    * Entries of stopped sessions are evicted on every build call, so
-    * a long-lived JVM that cycles sessions or benches several SF dirs
-    * doesn't accumulate dead frames and centroid arrays
-    * ([[clearCache]] drops everything, for tests and services). */
-  private val built = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), (DataFrame, Array[Array[Double]])]
-  private val counted = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Long]
-
-  private def evictStopped(): Unit = {
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    counted.keys.filter(_._1.sparkContext.isStopped).foreach(counted.remove)
-  }
-  // also run at context stop, so the LAST session of a JVM is dropped
-  // without waiting for a next build call (ADVICE r7)
-  graft.functions.SessionEvict.register(() => evictStopped())
-  private[graft] def cacheSize: Int = built.size
-  private[graft] def clearCache(): Unit = { built.clear(); counted.clear() }
-
-  /** Corpus row count, memoized per (session, dir): the adaptive
-    * geometry needs it on every build call, and it only changes when
-    * the corpus dir does. */
+  /** Corpus row count, memoized per (session, dir) under the
+    * embeddings stamp: the adaptive geometry needs it on every build
+    * call, and it only changes when the corpus does. */
   private[graft] def corpusCount(s: SparkSession, dir: String): Long =
-    counted.getOrElseUpdate((s, dir), Tables.embeddings(s, dir).count())
+    DfCache.memo(s, s"ivfCount:$dir", Tables.stamp(dir, "embeddings"))(
+      Tables.embeddings(s, dir).count())
 
   /** Training-sample budget per centroid for the k-means fit — the
     * FAISS convention (max_points_per_centroid = 256 in faiss's
@@ -303,19 +277,28 @@ object IvfIndex {
       }
     }
 
-  /** `k = 0` (the default) means the corpus-adaptive [[defaultNlist]];
+  /** Assign every vector to its (cosine) nearest centroid; the
+    * returned frame is the index: repartitioned on centroid_id.
+    * Memoized per (session, dir, RESOLVED nlist) in the session memo
+    * under the embeddings stamp: an index is a persistent artifact —
+    * refitting k-means for every query that probes it is an artifact
+    * of the per-query test harness, not the design, while a corpus
+    * regenerated in place is refit. The key carries the resolved
+    * geometry, so `k = 0` (adaptive) and an explicit k equal to the
+    * adaptive default hit the same entry — an identical geometry is
+    * never fit twice.
+    *
+    * `k = 0` (the default) means the corpus-adaptive [[defaultNlist]];
     * an explicit k is a sizing override. Artifacts are persisted iff
     * the resolved geometry IS the adaptive default (so an explicit
     * sizing k that happens to equal the default persists the identical
     * artifacts rather than skipping them). */
   def build(s: SparkSession, dir: String,
       k: Int = 0): (DataFrame, Array[Array[Double]]) = {
-    graft.functions.SessionEvict.hook(s)
-    evictStopped()
     val n = corpusCount(s, dir)
     val default = defaultNlist(n)
     val nlist = if (k > 0) k else default
-    built.getOrElseUpdate((s, dir, nlist), {
+    DfCache.memo(s, s"ivfBuild:$dir:$nlist", Tables.stamp(dir, "embeddings")) {
       val emb = Tables.embeddings(s, dir)
       val tm = trainMod(n, nlist)
       val train = guardedStrideSample(emb, tm, minRows = nlist)
@@ -345,7 +328,7 @@ object IvfIndex {
           .parquet(s"${dumpDir(dir)}/centroids.parquet")
       }
       (indexed, centroids)
-    })
+    }
   }
 
   private[graft] def cosineDist(a: Array[Double], b: Array[Double]): Double = {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.FloatVecDistance
+import graft.functions.{DfCache, FloatVecDistance}
 
 /** Product quantization (PQ) — the memory-compression scale path for
   * ANN serving (Jégou et al., "Product Quantization for Nearest
@@ -82,31 +82,6 @@ object PqIndex {
 
   /** codebooks(m)(k) = the k-th codeword of subspace m (dsub doubles). */
   type Codebooks = Array[Array[Array[Double]]]
-
-  /** Memoized per (session, dir); entries of stopped sessions are
-    * evicted on every build call (same hygiene as IvfIndex.built —
-    * a long-lived JVM cycling sessions must not pin dead frames). */
-  private val built = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Codebooks)]
-  /** Residual memo carries the resolved IVF geometry like
-    * IvfIndex.built — a sizing-override build must not collide with
-    * the default-geometry artifacts. Value = (codes, codebooks,
-    * per-cell encode offsets — unit centroids in residual mode, zero
-    * vectors in flat mode). */
-  private val builtRes = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Option[Boolean], Int),
-      (DataFrame, Codebooks, Array[Array[Double]])]
-
-  private[graft] def cacheSize: Int = built.size + builtRes.size
-  private[graft] def clearCache(): Unit = { built.clear(); builtRes.clear() }
-
-  // stop-time twin of the evict-on-access passes in build/buildResidual:
-  // the last stopped session of a JVM has no next build call to evict
-  // it, so it would otherwise pin its frames and codebook arrays
-  graft.functions.SessionEvict.register(() => {
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    builtRes.keys.filter(_._1.sparkContext.isStopped).foreach(builtRes.remove)
-  })
 
   private def normalized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"),
@@ -222,11 +197,10 @@ object PqIndex {
 
   /** Fit per-subspace codebooks and encode the corpus. Returns the
     * codes table (vec_id, code int) and the codebooks. Memoized per
-    * (session, dir): the PQ index is a persistent artifact. */
-  def build(s: SparkSession, dir: String): (DataFrame, Codebooks) = {
-    graft.functions.SessionEvict.hook(s)
-    built.keys.filter(_._1.sparkContext.isStopped).foreach(built.remove)
-    built.getOrElseUpdate((s, dir), {
+    * (session, dir) under the embeddings stamp: the PQ index is a
+    * persistent artifact. */
+  def build(s: SparkSession, dir: String): (DataFrame, Codebooks) =
+    DfCache.memo(s, s"pqBuild:$dir", Tables.stamp(dir, "embeddings")) {
       val norm = normalized(Tables.embeddings(s, dir)).cache()
       val dim = norm.select(size(col("nvec"))).head().getInt(0)
       val codebooks: Codebooks = fitOn(norm, dim)
@@ -242,8 +216,7 @@ object PqIndex {
         IvfIndex.corpusCount(s, dir))
       norm.unpersist()
       (out, codebooks)
-    })
-  }
+    }
 
   /** L2-normalize one vector (the centroid side of the residual). */
   private[graft] def l2norm(a: Array[Double]): Array[Double] = {
@@ -292,7 +265,9 @@ object PqIndex {
     * Derived from the SAME persisted IVF artifacts the serving path
     * probes (`index` = the assignment frame, `centroids` = the fit
     * dictionary), so encode-time and serve-time cells can never
-    * disagree. Memoized per (session, dir, nlist) like IvfIndex.built;
+    * disagree. Memoized per (session, dir, nlist, mode, m) under the
+    * embeddings stamp, like IvfIndex.build (a sizing-override build
+    * must not collide with the default-geometry artifacts);
     * artifacts persist only for the default geometry (a sizing
     * override can't poison the oracle's artifact dir). Build cost is
     * one narrow join + typed map over the corpus — same shape as the
@@ -302,15 +277,14 @@ object PqIndex {
       forceMode: Option[Boolean] = None,
       m: Int = NumSubspaces)
       : (DataFrame, Codebooks, Array[Array[Double]]) = {
-    graft.functions.SessionEvict.hook(s)
-    builtRes.keys.filter(_._1.sparkContext.isStopped).foreach(builtRes.remove)
     require(m >= 1 && m <= 16, s"PQ subspace count $m outside the 4-bit packing range")
     val isDefaultGeometry =
       centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(s, dir))
     // a forced mode (test/measurement) memoizes under its own key —
     // None (adaptive/env) stays the production entry
     val mode = forceMode.orElse(envByResidual)
-    builtRes.getOrElseUpdate((s, dir, centroids.length, mode, m), {
+    DfCache.memo(s, s"pqResBuild:$dir:${centroids.length}:$mode:$m",
+        Tables.stamp(dir, "embeddings")) {
       import s.implicits._
       val ncent = centroids.map(l2norm)
       val bcCent = s.sparkContext.broadcast(ncent)
@@ -379,7 +353,7 @@ object PqIndex {
       out.count() // materialize before dropping the encode frames
       resid.unpersist(); assigned.unpersist()
       (out, codebooks, offsets)
-    })
+    }
   }
 
   /** ADC scan: approximate distance of every code to `query` via the

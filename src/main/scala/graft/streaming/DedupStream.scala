@@ -45,7 +45,11 @@ object DedupStream {
     val s = bands.sparkSession
     // ≤ NumBands small ints — partition-pruning metadata, not data.
     val batchBands = bands.select("band").distinct().collect().map(_.getInt(0))
-    s.read.parquet(statePath).as("o")
+    // the state table has the band schema, `band` as its partition
+    // column; read it with that schema explicitly (ADVICE r18): after a
+    // first batch with zero band rows the state dir holds no data
+    // files, and schema inference would fail the next batch
+    s.read.schema(bands.schema).parquet(statePath).as("o")
       .filter(col("o.band").isin(batchBands.toIndexedSeq: _*))
       .join(broadcast(bands).as("n"),
         col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey") &&
@@ -62,10 +66,16 @@ object DedupStream {
     val outPath = s"$root/cands"
     val batchBandsPath = s"$root/batch_bands"
     val batchSchema = graft.Tables.documents(s, dir).schema
-    val stream = s.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "documents.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    // a file-stream source needs a directory: a table stored as a
+    // directory of part files streams from it, one file per
+    // micro-batch; a single-file table streams from the sf dir,
+    // glob-filtered down to it
+    val table = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
+    val reader = s.readStream.schema(batchSchema).option("maxFilesPerTrigger", "1")
+    val stream =
+      if (table.getFileSystem(s.sparkContext.hadoopConfiguration).getFileStatus(table).isDirectory)
+        reader.parquet(table.toString)
+      else reader.option("pathGlobFilter", "documents.parquet").parquet(dir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // a file-source micro-batch is ONE partition per file; the

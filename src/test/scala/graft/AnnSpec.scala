@@ -420,12 +420,12 @@ class AnnSpec extends AnyFunSuite {
     assert(served._2 eq blocked._2)
   }
 
-  test("index cache is evictable: clearCache drops entries, rebuild still works") {
-    import graft.operators.IvfIndex
+  test("index cache is evictable: DfCache.clear drops entries, rebuild still works") {
+    import graft.functions.DfCache
     IvfIndex.build(spark, sf)
-    assert(IvfIndex.cacheSize >= 1)
-    IvfIndex.clearCache()
-    assert(IvfIndex.cacheSize == 0)
+    assert(DfCache.sizeFor(spark) >= 1)
+    DfCache.clear()
+    assert(DfCache.sizeFor(spark) == 0)
     val (_, centroids) = IvfIndex.build(spark, sf)
     assert(centroids.length == IvfIndex.defaultNlist(IvfIndex.corpusCount(spark, sf)))
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the bench harness's pure pieces: the loadavg-aware drift
@@ -86,5 +88,25 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.sameSf("/root/testdata/sf0.1", "/root/testdata/x/../sf0.1"))
     assert(!Bench.sameSf("/root/testdata/sf0.1", "/tmp/graft_sf1"))
     assert(!Bench.sameSf("", "/tmp/graft_sf1"))
+  }
+
+  test("errorsJson: one {class, message} object per failed query, escaped, sf-safe") {
+    val json = Bench.errorsJson(Seq(
+      "stream_trending" -> new IllegalStateException("scratch path \"/tmp/x\" is locked"),
+      "q_a" -> new RuntimeException()))
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+    assert(tree.isObject)
+    assert(tree.fieldNames().asScala.toSeq == Seq("q_a", "stream_trending"))
+    val e = tree.get("stream_trending")
+    assert(e.fieldNames().asScala.toSeq == Seq("class", "message"))
+    assert(e.get("class").asText == "java.lang.IllegalStateException")
+    assert(e.get("message").asText == "scratch path \"/tmp/x\" is locked")
+    assert(tree.get("q_a").get("message").isNull)
+    assert(Bench.errorsJson(Nil) == "{}")
+    // an error message can never shadow the dump's own sf field
+    val sneaky = Bench.errorsJson(Seq("q" -> new RuntimeException("\"sf\":\"/other\"")))
+    val full = s"""{"queries":{"q":-1.0},"failed":["q"],"errors":$sneaky,"sf":"/root/testdata/sf0.1"}"""
+    assert(Bench.parsePrevSf(full) == "/root/testdata/sf0.1")
+    assert(Bench.parsePrevQueries(full) == Map("q" -> -1.0))
   }
 }

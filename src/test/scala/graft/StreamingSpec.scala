@@ -1,13 +1,41 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.DfCache
 
 import graft.operators.{Analytics, IvfIndex, Multimodal}
 import graft.streaming.{IvfStream, Streaming}
 
 class StreamingSpec extends AnyFunSuite {
   import SparkTestSession._
+
+  private def partFiles(table: String): Seq[Path] =
+    scala.util.Using.resource(Files.list(Paths.get(table)))(_.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toList.sorted)
+
+  /** Write `df` as ONE parquet file at `path` — the testdata layout —
+    * replacing whatever is there. */
+  private def writeSingleFile(df: DataFrame, path: String): Unit = {
+    val tmp = Files.createTempDirectory("graft_single").toString + "/t"
+    df.coalesce(1).write.parquet(tmp)
+    Files.move(partFiles(tmp).head, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** `n` seeded 8-d vectors with the embeddings table's schema. */
+  private def corpus(n: Int): DataFrame = {
+    import spark.implicits._
+    val rng = new scala.util.Random(7)
+    Seq.tabulate(n)(i => (i.toLong, Array.fill(8)(rng.nextGaussian().toFloat), i % 3))
+      .toDF("vec_id", "embedding", "label")
+  }
 
   test("stream_hourly equals batch q_events_hourly") {
     val stream = Streaming.hourly(spark, sf).collect().map(_.toSeq).toSet
@@ -141,6 +169,79 @@ class StreamingSpec extends AnyFunSuite {
     val out = Streaming.qualityRoute(spark, dir)
     assert(out.columns.toSeq == Seq("route", "n_docs", "avg_quality"))
     assert(out.count() == 0)
+  }
+
+  test("a corpus regenerated in place is re-counted, refit and re-indexed in the same session") {
+    val dir = Files.createTempDirectory("graft_regen").toString
+    val path = s"$dir/embeddings.parquet"
+    def streamedCentroids(): Long =
+      spark.read.parquet(IvfStream.scratchRoot(dir) + "/dump/centroids.parquet").count()
+    def state() = (IvfIndex.corpusCount(spark, dir), IvfIndex.build(spark, dir)._2.length,
+      IvfStream.indexUpsert(spark, dir).collect().map(_.toSeq).toSeq, streamedCentroids())
+    writeSingleFile(corpus(300), path)
+    val (n0, nlist0, _, sNlist0) = state()
+    assert((n0, nlist0, sNlist0) == ((300L, 17, 16L)))
+    // overwrite the table in place with a corpus three times the size
+    writeSingleFile(corpus(900), path)
+    val regenerated = state()
+    DfCache.clear()
+    val fresh = state()
+    assert(regenerated._1 == 900L && regenerated._1 == fresh._1, "stale corpus count")
+    assert(regenerated._2 == IvfIndex.defaultNlist(900L) && regenerated._2 == fresh._2,
+      "stale batch index geometry")
+    assert(regenerated._4 == IvfIndex.defaultNlist(450L) && regenerated._4 == fresh._4,
+      "stale streamed fit")
+    assert(regenerated._3.size == 10)
+    assert(regenerated._3 == fresh._3, "stale streamed probe")
+  }
+
+  test("a same-size rewrite of a nested part file yields a new Tables.table reader (ADVICE r17)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_nested").toString
+    val table = s"$dir/t.parquet"
+    Seq(1L, 2L).toDF("v").coalesce(1).write.parquet(table)
+    // checksum sidecars would reject the rewritten bytes below
+    scala.util.Using.resource(Files.list(Paths.get(table)))(_.iterator().asScala.toList)
+      .filter(_.getFileName.toString.endsWith(".crc")).foreach(Files.delete)
+    val first = Tables.table(spark, dir, "t")
+    assert(Tables.table(spark, dir, "t") eq first, "an unchanged table reuses its reader")
+    val other = Files.createTempDirectory("graft_nested_src").toString + "/t"
+    Seq(3L, 4L).toDF("v").coalesce(1).write.parquet(other)
+    val part = partFiles(table).head
+    val before = Files.getLastModifiedTime(part).toMillis
+    val bytes = Files.readAllBytes(partFiles(other).head)
+    assert(bytes.length == Files.size(part), "the rewrite must keep the file size")
+    Files.write(part, bytes)
+    Files.setLastModifiedTime(part, FileTime.fromMillis(before + 10000L))
+    val second = Tables.table(spark, dir, "t")
+    assert(second ne first, "a rewritten part file must not reuse the stale reader")
+    assert(second.collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+  }
+
+  test("dedup stream: a zero-band first micro-batch does not fail the next one (ADVICE r18)") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_zeroband").toString
+    val table = s"$dir/documents.parquet"
+    def docs(rows: (Long, String)*) = rows.map { case (id, t) => (id, t, "en", "syn", t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars").coalesce(1)
+    // file 1: only docs under 3 tokens -> the first batch has no bands
+    docs(1L -> "one two", 2L -> "ok").write.parquet(table)
+    val tiny = partFiles(table)
+    // file 2: a real near-duplicate pair (one word differs)
+    val words = (1 to 40).map(i => s"w$i")
+    docs(3L -> words.mkString(" "), 4L -> (words.init :+ "other").mkString(" "))
+      .write.mode("append").parquet(table)
+    // the file source drains oldest first: pin the tiny file first
+    val now = System.currentTimeMillis()
+    partFiles(table).foreach { f =>
+      Files.setLastModifiedTime(f, FileTime.fromMillis(if (tiny.contains(f)) now - 60000L else now))
+    }
+    val out = graft.streaming.DedupStream.candidates(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(out.contains((3L, 4L)), s"near-duplicate pair not found: $out")
+    val batch = graft.operators.Dedup.bandCandidatesOf(Tables.documents(spark, dir))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(out == batch)
   }
 
   test("mm_frame_sample is deterministic and bounded by n_frames") {
