@@ -4,7 +4,8 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, posexplode}
 import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpr}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -100,8 +101,21 @@ case class TopKByDist(
     copy(distExpr = c(0), idExpr = c(1))
 }
 
+/** Per-key top-k over an already-scored candidate stream; `KnnJoin`
+  * is the other batch top-k spelling (README "Batch top-k"). */
 object TopKAgg {
   /** Top-k smallest (dist, id) pairs in the group, ascending. */
   def topkByDist(dist: Column, id: Column, k: Int): Column =
     toColumn(TopKByDist(toExpr(dist), toExpr(id), k).toAggregateExpression())
+
+  /** Bounded top-k rows per key by ascending (`dist`, `id`): one row
+    * per kept entry, `(key, id, dist, rnk)` with `rnk` 1..k. The
+    * shuffle carries keys×k rows, not every candidate; `dist` must be
+    * a double and `id` a long, and a null `dist` or `id` is dropped. */
+  def topKPerKey(df: DataFrame, key: Column, dist: Column, id: Column, k: Int): DataFrame =
+    df.groupBy(key)
+      .agg(topkByDist(dist, id, k).as("top"))
+      .select(key, posexplode(col("top")))
+      .select(key, col("col.id").as("id"), col("col.dist").as("dist"),
+        (col("pos") + 1).cast("long").as("rnk"))
 }

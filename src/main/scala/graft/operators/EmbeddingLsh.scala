@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
-import graft.functions.FloatVecDistance
+import graft.functions.{FloatVecDistance, TopKAgg}
 
 /** Random-hyperplane (SimHash-for-vectors) LSH over embeddings — the
   * blocked scale path for embedding near-dup detection. `Dedup
@@ -150,14 +150,11 @@ object EmbeddingLsh {
       .filter(col("qid") =!= col("vec_id"))
       .select(col("qid"), col("vec_id"), col("qv"), col("embedding"))
       .distinct()
-    cands
+    val scored = cands
       .select(col("qid"), col("vec_id"),
         round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 5).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    TopKAgg.topKPerKey(scored, col("qid"), col("dist"), col("vec_id"), 5)
+      .select(col("qid"), col("id").as("vec_id"), col("dist"), col("rnk"))
       .orderBy("qid", "rnk")
   }
 
@@ -170,22 +167,22 @@ object EmbeddingLsh {
     * reproducible — and hash-checked against an oracle that composes
     * the two SQL chains.
     *
-    * Scale: the exact side is the one-off ground-truth pass (same
-    * broadcast + bounded top-k shape as vs_knn_batch, run on the
-    * query SAMPLE only); the comparison is an answer-sized equi-join. */
+    * Scale: the exact side is the one-off ground-truth pass: the
+    * corpus streams against the broadcast query SAMPLE (the bounded
+    * side) into the per-key top-k helper; the comparison is an
+    * answer-sized equi-join. */
   def recallReport(s: SparkSession, dir: String): DataFrame = {
     val ann = annServe(s, dir).select(col("qid"), col("vec_id"))
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
     val qs = emb.filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val exact = Tables.spread(s, dir, "embeddings")
+    val scored = Tables.spread(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding")).crossJoin(broadcast(qs))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         round(FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 5).as("top"))
-      .select(col("qid"), explode(col("top.id")).as("vec_id"))
+    val exact = TopKAgg.topKPerKey(scored, col("qid"), col("dist"), col("vec_id"), 5)
+      .select(col("qid"), col("id").as("vec_id"))
     val hits = exact.join(ann, Seq("qid", "vec_id"), "left_semi")
       .groupBy("qid").agg(count(lit(1)).as("n_hit"))
     exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))

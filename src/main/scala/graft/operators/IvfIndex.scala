@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
-import graft.functions.{DfCache, FloatVecDistance}
+import graft.functions.{DfCache, FloatVecDistance, TopKAgg}
 
 /** IVF (inverted-file) approximate nearest neighbor — the Spark
   * re-expression of the reference's vector index
@@ -376,53 +376,42 @@ object IvfIndex {
     search(s, index.filter(col("vec_id") =!= 0), centroids, query, k = 10)
   }
 
-  /** Distributed probe ranking for a TABLE of query vectors: the
-    * (tiny, nlist-row) centroid dictionary is broadcast against the
-    * query table, and a bounded top-nprobe agg picks each query's
-    * probe set — shuffle volume = queries × nprobe, i.e. the answer
-    * size, thanks to map-side partial aggregation in TopKAgg. Returns
-    * (qid, centroid_id) pairs ready to equi-join the
-    * centroid-partitioned index (partition pruning expressed as a
-    * join key). Bit-identical to `search`'s driver-side ranking (same
-    * left-to-right double accumulation, same (dist, id) tie-break).
-    * Shared by batch serving ([[searchBatch]]) and IVF-blocked mining
+  /** Distributed probe ranking for a TABLE of query vectors: one
+    * [[graft.plans.KnnJoin]] of the query table against the (tiny,
+    * nlist-row) centroid dictionary — broadcast once, a bounded
+    * top-nprobe heap per query, no shuffle and no (query, centroid)
+    * pair rows. Returns the query rows (every column of `queriesDf`,
+    * which needs (qid, qv)) with one `centroid_id` per probed cell,
+    * ready to equi-join the centroid-partitioned index (partition
+    * pruning expressed as a join key) with the query payload already
+    * on the pair table. Bit-identical to `search`'s driver-side
+    * ranking (same left-to-right double accumulation — the mixed
+    * float/double kernel — same (dist, id) tie-break). Shared by
+    * batch serving ([[searchBatch]]) and IVF-blocked mining
     * ([[Multimodal.pairMiningIvf]]) so a probe-ranking fix lands
-    * exactly once. `queriesDf` needs (qid, qv); extra columns pass
-    * through the ranking unprojected. */
+    * exactly once. */
   def probePairs(s: SparkSession, queriesDf: DataFrame,
       centroids: Array[Array[Double]], nprobe: Int = 0): DataFrame = {
     import s.implicits._
-    val np = resolveNprobe(centroids.length, nprobe)
     val cdf = centroids.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
       .toSeq.toDF("cid", "cvec")
-    queriesDf
-      .crossJoin(broadcast(cdf))
-      .select(col("qid"),
-        // codegen'd mixed float/double kernel: corpus-sized query
-        // tables rank against the centroid dictionary here, and the
-        // interpreted zip_with path measured ~25 s of a 35 s mining
-        // job at corpus × nlist rows. Bit-identical result.
-        FloatVecDistance.cosine(col("qv"), col("cvec")).as("cdist"),
-        col("cid"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("cdist"), col("cid"), np).as("probes"))
-      .select(col("qid"), explode(col("probes.id")).as("cid"))
-      .select(col("qid"), col("cid").cast("int").as("centroid_id"))
+    val out = queriesDf.columns.map(c => col(s"`$c`")) :+ col("cid").cast("int").as("centroid_id")
+    graft.plans.KnnJoin(queriesDf, cdf, "qv", "cvec",
+        k = resolveNprobe(centroids.length, nprobe), metric = "cosine", tieBreak = Some("cid"))
+      .select(out: _*)
   }
 
   /** Batch serving against the IVF layout: a TABLE of query vectors,
     * each probing only its nprobe nearest centroids' partitions.
     * Fully distributed — the query table never touches the driver:
-    * the (tiny, k-row) centroid table is broadcast against the query
-    * table and a bounded top-nprobe agg picks each query's probe set
-    * (shuffle volume = queries × nprobe, i.e. the answer size, thanks
-    * to map-side partial aggregation in TopKByDist). The data side is
-    * one equi-join of the (query, probed-centroid) pairs against the
+    * [[probePairs]] ranks the (tiny, k-row) broadcast centroid table
+    * per query in one KnnJoin, no shuffle. The data side is one
+    * equi-join of the (query, probed-centroid) pairs against the
     * centroid-partitioned index — partition pruning expressed as a
     * join key — then the exact kernel and a bounded top-k agg per
-    * query. Both query-sized joins (probe pairs → index, qid → qv)
-    * are left un-hinted: AQE broadcasts them at local scale and falls
-    * back to high-cardinality shuffle joins for a 100 TB-sized query
+    * query. The query-sized pair join is left un-hinted: AQE
+    * broadcasts it at local scale and falls back to a
+    * high-cardinality shuffle join for a 100 TB-sized query
     * table. The distributed centroid
     * ranking is bit-identical to `search`'s driver-side ranking (same
     * left-to-right double accumulation, same (dist, id) tie-break).
@@ -431,17 +420,16 @@ object IvfIndex {
   def searchBatch(s: SparkSession, index: DataFrame,
       centroids: Array[Array[Double]],
       queriesDf: DataFrame, k: Int, nprobe: Int = 0): DataFrame = {
-    // the query payload joins onto the (qid, centroid) PAIR table —
-    // |queries|×nprobe rows — BEFORE the index join explodes
-    // candidates: every join precedes the explosion, so the candidate
-    // stream flows straight into the codegen kernel and the map-side
-    // partial agg, never through a sort or shuffle (joining qv onto
-    // the exploded stream instead lets AQE pick a sort-merge join
-    // there once the query table outgrows broadcast, sorting the
-    // candidate stream — the measured 30× mining failure mode).
-    val pp = probePairs(s, queriesDf, centroids, nprobe)
-      .join(queriesDf.select(col("qid"), col("qv")), "qid")
-    index
+    // the query payload rides on the (qid, centroid) PAIR table —
+    // |queries|×nprobe rows — out of probePairs, so the index join is
+    // the only join and the exploded candidate stream flows straight
+    // into the codegen kernel and the map-side partial agg, never
+    // through a sort or shuffle (joining qv onto the exploded stream
+    // instead lets AQE pick a sort-merge join there once the query
+    // table outgrows broadcast, sorting the candidate stream — the
+    // measured 30× mining failure mode).
+    val pp = probePairs(s, queriesDf.select(col("qid"), col("qv")), centroids, nprobe)
+    val scored = index
       // the pair join stays UN-HINTED: AQE broadcasts it at local
       // scale (plan-pinned in AnnSpec) and falls back to a shuffle
       // equi-join when the query table grows. A forced broadcast()
@@ -451,11 +439,8 @@ object IvfIndex {
       .select(col("qid"), col("vec_id"),
         graft.functions.SafeRound.round(
           FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    TopKAgg.topKPerKey(scored, col("qid"), col("dist"), col("vec_id"), k)
+      .select(col("qid"), col("id").as("vec_id"), col("dist"), col("rnk"))
       .orderBy("qid", "rnk")
   }
 
@@ -514,9 +499,8 @@ object IvfIndex {
           .filter(round(col("dist"), 4) <= r)
           .select(col("qid"), col("vec_id"))
       case None =>
-        scored.groupBy(col("qid"))
-          .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-          .select(col("qid"), explode(col("top.id")).as("vec_id"))
+        TopKAgg.topKPerKey(scored, col("qid"), col("dist"), col("vec_id"), k)
+          .select(col("qid"), col("id").as("vec_id"))
     }
     val truth = truthIds
       .join(index.select(col("vec_id"), col("centroid_id")), "vec_id")
@@ -661,13 +645,14 @@ object IvfIndex {
     * and recall at a chosen depth without the env knobs. */
   private[graft] def dedupPairsAt(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]], np: Int): DataFrame = {
-    val probes = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    // corpus-sized probe table: both joins stay un-hinted (AQE
-    // broadcasts at local scale, shuffle equi-join at 100 TB) and
-    // both PRECEDE the explosion — the exploded stream itself never
+    // corpus-sized probe table through the spread reader (probePairs
+    // keeps its input's partitioning). The pair join stays un-hinted
+    // (AQE broadcasts at local scale, shuffle equi-join at 100 TB) and
+    // the payload rides on the pair rows — the exploded stream never
     // crosses a sort or shuffle before the radius filter.
-    val pp = probePairs(s, probes, centroids, np).join(probes, "qid")
+    val probes = Tables.spread(s, dir, "embeddings")
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val pp = probePairs(s, probes, centroids, np)
     index
       .join(pp, "centroid_id")
       .filter(col("qid") =!= col("vec_id"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.DfCache
+import graft.functions.{DfCache, TopKAgg}
 
 /** IVF-PQ — the composed billion-vector serving layout: IVF centroid
   * pruning picks which partitions to scan, then the ADC scan runs over
@@ -114,16 +114,16 @@ object IvfPq {
       // (dist, id) ordering — otherwise a rounding-induced tie could
       // demote a true neighbor only on one side and the "GUARANTEED
       // recovered" lower bound would not be strict (ADVICE r11).
-      val truthIds = index.crossJoin(broadcast(sample))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"),
-          graft.functions.SafeRound.round(
-            graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
-            .as("dist"),
-          col("vec_id"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-        .select(col("qid"), explode(col("top.id")).as("vec_id"))
+      val truthIds = TopKAgg.topKPerKey(
+          index.crossJoin(broadcast(sample))
+            .filter(col("vec_id") =!= col("qid"))
+            .select(col("qid"),
+              graft.functions.SafeRound.round(
+                graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
+                .as("dist"),
+              col("vec_id")),
+          col("qid"), col("dist"), col("vec_id"), k)
+        .select(col("qid"), col("id").as("vec_id"))
       // per-query centroid ranking (sample × nlist, windowed per query)
       val cdf = centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
         .toSeq.toDF("centroid_id", "cvec")
@@ -324,7 +324,7 @@ object IvfPq {
     val adc = graft.functions.DfCache.getOrElseUpdate(s,
       s"ivfPqAdcRes:$dir:${centroids.length}:" +
         s"${IvfIndex.resolveNprobe(centroids.length, np)}:$forceMode:$m")(
-      PqIndex.adcTableResidual(pairs.join(queriesDf, "qid"), offsets, codebooks))
+      PqIndex.adcTableResidual(pairs, offsets, codebooks))
     // every join precedes the candidate explosion (the searchBatch /
     // pairMiningIvfAt rule): codes attach to the assignment table on
     // the 8-byte vec_id (corpus-sized × corpus-sized equi-join — both
@@ -337,27 +337,22 @@ object IvfPq {
     // (plan-pinned in AnnSpec) and shuffles when the query table
     // grows; a forced broadcast overflowed exactly that case.
     val ppAdc = pairs.join(adc, Seq("qid", "centroid_id"))
-    val short = index.select(col("vec_id"), col("centroid_id"))
+    val adist = index.select(col("vec_id"), col("centroid_id"))
       .join(codes, "vec_id")
       .join(ppAdc, "centroid_id")
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"),
         PqIndex.adcScoreOver(col("adc"), col("code"), codebooks.length).as("adist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("adist"), col("vec_id"), sl)
-        .as("short"))
-      .select(col("qid"), explode(col("short.id")).as("vec_id"))
-    short.join(Tables.embeddings(s, dir), "vec_id")
+    val short = TopKAgg.topKPerKey(adist, col("qid"), col("adist"), col("vec_id"), sl)
+      .select(col("qid"), col("id").as("vec_id"))
+    val reranked = short.join(Tables.embeddings(s, dir), "vec_id")
       .join(queriesDf.select(col("qid"), col("qv")), "qid")
       .select(col("qid"), col("vec_id"),
         graft.functions.SafeRound.round(
           graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)
           .as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), k).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid"), col("col.id").as("vec_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    TopKAgg.topKPerKey(reranked, col("qid"), col("dist"), col("vec_id"), k)
+      .select(col("qid"), col("id").as("vec_id"), col("dist"), col("rnk"))
       .orderBy("qid", "rnk")
   }
 

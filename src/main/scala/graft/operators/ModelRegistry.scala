@@ -161,15 +161,13 @@ object ModelRegistry {
     // bounded top-k aggregate on key (-sim, id) — identical order to a
     // (sim DESC, id) window rank, but the shuffle carries #sample × k
     // rows instead of every scored pair.
-    dots
+    val sims = dots
       .join(broadcast(norms.select(col("doc_id").as("da"), col("nrm").as("na"))), "da")
       .join(broadcast(norms.select(col("doc_id").as("db"), col("nrm").as("nb"))), "db")
       .select(col("da"), col("db"),
         round(col("dot") / (col("na") * col("nb")), 4).as("sim"))
-      .groupBy(col("da"))
-      .agg(graft.functions.TopKAgg.topkByDist(-col("sim"), col("db"), k).as("top"))
-      .select(col("da").as("doc_id"), explode(col("top")))
-      .select(col("doc_id"), col("col.id").as("nbr"))
+    graft.functions.TopKAgg.topKPerKey(sims, col("da"), -col("sim"), col("db"), k)
+      .select(col("da").as("doc_id"), col("id").as("nbr"))
   }
 
   /** A/B model evaluation: for each sampled query doc, how many of its

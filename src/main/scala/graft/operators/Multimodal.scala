@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
 import graft.Tables
+import graft.functions.TopKAgg
 
 /** Raw media bytes + typed metadata after stub decode. */
 case class MediaMeta(
@@ -184,10 +185,10 @@ object Multimodal {
     * nearest embeddings whose document comes from a DIFFERENT source —
     * nearest wrong-source items are the hardest negatives, and the
     * same-source mask suppresses false negatives (near-duplicate
-    * boilerplate from one crawl domain). Same broadcast nested-loop +
-    * bounded top-k topology as vs_knn_batch (shuffle volume = anchors
-    * × 3, the answer size); the source mask is evaluated INSIDE the
-    * scoring join, before the top-k — never a post-filter that would
+    * boilerplate from one crawl domain). Same KnnJoin as vs_knn_batch
+    * (broadcast corpus side, a bounded heap per anchor, no pair rows);
+    * the self and same-source masks are exclusions INSIDE the
+    * operator, before the heap — never a post-filter that would
     * shrink k. At 100 TB the anchor×corpus product swaps to the
     * LSH/IVF-blocked layouts like every other serving op. */
   def pairMining(s: SparkSession, dir: String): DataFrame = {
@@ -195,19 +196,14 @@ object Multimodal {
     val anchors = Tables.spread(s, dir, "embeddings")
       .join(src, col("vec_id") === col("doc_id"))
       .select(col("vec_id"), col("embedding"), col("source"))
-    val nbr = broadcast(Tables.embeddings(s, dir)
+    val nbr = Tables.embeddings(s, dir)
       .join(src, col("vec_id") === col("doc_id"))
       .select(col("vec_id").as("neg_id"), col("embedding").as("nvec"),
-        col("source").as("neg_source")))
-    anchors.crossJoin(nbr)
-      .filter(col("vec_id") =!= col("neg_id") && col("source") =!= col("neg_source"))
-      .select(col("vec_id"), col("neg_id"),
-        round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("neg_id"), 3).as("top"))
-      .select(col("vec_id").as("doc_id"), posexplode(col("top")))
-      .select(col("doc_id"), col("col.id").as("neg_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+        col("source").as("neg_source"))
+    graft.plans.KnnJoin(anchors, nbr, "embedding", "nvec", k = 3, metric = "cosine",
+        roundDp = 4, tieBreak = Some("neg_id"),
+        exclude = Seq("vec_id" -> "neg_id", "source" -> "neg_source"))
+      .select(col("vec_id").as("doc_id"), col("neg_id"), col("dist"), col("rnk"))
       .orderBy("doc_id", "rnk")
   }
 
@@ -263,16 +259,13 @@ object Multimodal {
       .select(col("vec_id"), col("neg_id"))
       .distinct()
     val vecs = emb.select(col("vec_id"), col("embedding"))
-    cands
+    val scored = cands
       .join(vecs, "vec_id")
       .join(vecs.select(col("vec_id").as("neg_id"), col("embedding").as("nvec")), "neg_id")
       .select(col("vec_id"), col("neg_id"),
         round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("neg_id"), 3).as("top"))
-      .select(col("vec_id").as("doc_id"), posexplode(col("top")))
-      .select(col("doc_id"), col("col.id").as("neg_id"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    TopKAgg.topKPerKey(scored, col("vec_id"), col("dist"), col("neg_id"), 3)
+      .select(col("vec_id").as("doc_id"), col("id").as("neg_id"), col("dist"), col("rnk"))
       .orderBy("doc_id", "rnk")
   }
 
@@ -339,7 +332,8 @@ object Multimodal {
   private[graft] def pairMiningIvfAt(s: SparkSession, dir: String,
       index: DataFrame, centroids: Array[Array[Double]], np: Int): DataFrame = {
     val src = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    val anchors = Tables.embeddings(s, dir)
+    // spread stream reader: probePairs keeps the anchors' partitioning
+    val anchors = Tables.spread(s, dir, "embeddings")
       .join(src, col("vec_id") === col("doc_id"))
       .select(col("vec_id").as("qid"), col("embedding").as("qv"),
         col("source").as("q_source"))
@@ -347,29 +341,24 @@ object Multimodal {
     // (IvfIndex.probePairs); unlike searchBatch the pair table here is
     // anchors × nprobe = corpus-sized, so the index join stays
     // un-hinted (shuffle join at scale) instead of broadcast. The
-    // anchor payload (qv, source) joins onto the PAIR table — N×nprobe
-    // rows — BEFORE the index join explodes candidates: every join
-    // then precedes the explosion and the candidate stream flows
+    // anchor payload (qv, source) rides on the PAIR table — N×nprobe
+    // rows — out of probePairs, so the index join is the only join
+    // before the candidate explosion and the candidate stream flows
     // straight into the codegen kernel and the map-side partial agg,
-    // never through a sort or shuffle. (The previous order joined
-    // anchors onto the exploded stream; at the 30× calibrated depth
-    // AQE picked a sort-merge join there and SORTED the ~1B-row
-    // candidate stream — measured heap exhaustion. Join order only;
-    // same rows, oracle untouched.)
+    // never through a sort or shuffle. (Joining anchors onto the
+    // exploded stream instead let AQE pick a sort-merge join there at
+    // the 30× calibrated depth and SORT the ~1B-row candidate stream
+    // — measured heap exhaustion.)
     val pp = IvfIndex.probePairs(s, anchors, centroids, np)
-      .join(anchors.select(col("qid"), col("qv"), col("q_source")), "qid")
-    index
+    val scored = index
       .join(src.select(col("doc_id"), col("source").as("neg_source")),
         col("vec_id") === col("doc_id")).drop("doc_id")
       .join(pp, "centroid_id")
       .filter(col("vec_id") =!= col("qid") && col("neg_source") =!= col("q_source"))
       .select(col("qid"), col("vec_id"),
         round(graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4).as("dist"))
-      .groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("vec_id"), 3).as("top"))
-      .select(col("qid"), posexplode(col("top")))
-      .select(col("qid").as("doc_id"), col("col.id").as("neg_id"),
-        col("col.dist").as("dist"), (col("pos") + 1).cast("long").as("rnk"))
+    TopKAgg.topKPerKey(scored, col("qid"), col("dist"), col("vec_id"), 3)
+      .select(col("qid").as("doc_id"), col("id").as("neg_id"), col("dist"), col("rnk"))
       .orderBy("doc_id", "rnk")
   }
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SafeRound.round
 
@@ -70,23 +69,20 @@ object VectorSearch {
 
   /** Batch similarity search: top-5 neighbors for EVERY vector (bulk
     * form of online knn serving — the part of the reference workload
-    * that fits Spark). Broadcast nested-loop with per-key top-k. */
+    * that fits Spark), through the KnnJoin operator: the corpus
+    * streams against the broadcast index side, each row keeps a
+    * bounded heap, no pair rows and no shuffle. The distance is
+    * rounded and tie-broken on nid INSIDE the operator and the self
+    * match is excluded before the heap, so the kept 5 are exactly the
+    * oracle's first 5 by (rounded dist, nid). Serves both
+    * vs_knn_batch and vs_knn_join. */
   def knnBatch(s: SparkSession, dir: String): DataFrame = {
     val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
-    val nbr = broadcast(
-      Tables.embeddings(s, dir).select(col("vec_id").as("nid"), col("embedding").as("nvec")))
-    // Bounded top-k aggregate instead of a window rank: each map
-    // partition reduces to ≤ k entries per key before the exchange, so
-    // shuffle volume is #vectors × k, not the full N·M scored pairs.
-    emb.crossJoin(nbr)
-      .filter(col("vec_id") =!= col("nid"))
-      .select(col("vec_id"), col("nid"),
-        round(FloatVecDistance.cosine(col("embedding"), col("nvec")), 4).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.TopKAgg.topkByDist(col("dist"), col("nid"), 5).as("top"))
-      .select(col("vec_id"), posexplode(col("top")))
-      .select(col("vec_id"), col("col.id").as("nid"), col("col.dist").as("dist"),
-        (col("pos") + 1).cast("long").as("rnk"))
+    val nbr = Tables.embeddings(s, dir)
+      .select(col("vec_id").as("nid"), col("embedding").as("nvec"))
+    graft.plans.KnnJoin(emb, nbr, "embedding", "nvec", k = 5, metric = "cosine",
+        roundDp = 4, tieBreak = Some("nid"), exclude = Seq("vec_id" -> "nid"))
+      .select(col("vec_id"), col("nid"), col("dist"), col("rnk"))
       .orderBy(col("vec_id"), col("rnk"))
   }
 
@@ -198,26 +194,6 @@ object VectorSearch {
       .limit(10)
   }
 
-  /** Same batch-knn result through the custom KnnJoin operator
-    * (LogicalPlan + Strategy + SparkPlan): broadcast index side,
-    * per-row bounded heap, no shuffle. The distance is rounded and
-    * tie-broken on nid INSIDE the operator, so the kept k=6 are exactly
-    * the oracle's first 6 by (rounded dist, nid); dropping the self
-    * match (≤1 row) leaves the exact top-5. */
-  def knnJoin(s: SparkSession, dir: String): DataFrame = {
-    val emb = corpus(s, dir).select(col("vec_id"), col("embedding"))
-    val nbr = Tables.embeddings(s, dir)
-      .select(col("vec_id").as("nid"), col("embedding").as("nvec"))
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("nid"))
-    graft.plans.KnnJoin(emb, nbr, "embedding", "nvec", k = 6, metric = "cosine",
-        roundDp = 4, tieBreak = Some("nid"))
-      .filter(col("vec_id") =!= col("nid"))
-      .select(col("vec_id"), col("nid"), col("dist"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
-      .orderBy(col("vec_id"), col("rnk"))
-  }
-
   /** The knn query through plain SQL with the registered
     * vec_cosine_distance function — the reference's own interface
     * (SELECT … ORDER BY VECTOR_DISTANCE(…) FETCH FIRST k ROWS ONLY). */
@@ -318,6 +294,15 @@ object VectorSearch {
        |FROM embeddings, q WHERE vec_id <> 0
        |ORDER BY dist, vec_id LIMIT $k""".stripMargin
 
+  private val knnBatchSql: String =
+    s"""WITH d AS (
+       |  SELECT a.vec_id, b.vec_id AS nid,
+       |    round(1e-9 + ${dCosine("a.embedding", "b.embedding")}, 4) AS dist
+       |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id)
+       |SELECT vec_id, nid, dist,
+       |  row_number() OVER (PARTITION BY vec_id ORDER BY dist, nid) AS rnk
+       |FROM d QUALIFY rnk <= 5 ORDER BY vec_id, rnk""".stripMargin
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "vs_knn_cosine" -> (knnCosine _),
     "vs_knn_l2" -> (knnL2 _),
@@ -332,7 +317,7 @@ object VectorSearch {
     "vs_knn_int8" -> (knnInt8 _),
     "vs_knn_filtered" -> (knnFiltered _),
     "vs_knn_postfilter" -> (knnPostFiltered _),
-    "vs_knn_join" -> (knnJoin _),
+    "vs_knn_join" -> (knnBatch _),
     "vs_knn_sql" -> (knnSql _))
 
   val oracleSql: Map[String, String] = Map(
@@ -391,22 +376,8 @@ object VectorSearch {
          |d AS (SELECT vec_id, round(1e-9 + ${dCosine("embedding", "qv")}, 4) AS dist
          |      FROM embeddings, q WHERE vec_id <> 0)
          |SELECT vec_id, dist FROM d WHERE dist <= 0.8 ORDER BY dist, vec_id""".stripMargin,
-    "vs_knn_batch" ->
-      s"""WITH d AS (
-         |  SELECT a.vec_id, b.vec_id AS nid,
-         |    round(1e-9 + ${dCosine("a.embedding", "b.embedding")}, 4) AS dist
-         |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id)
-         |SELECT vec_id, nid, dist,
-         |  row_number() OVER (PARTITION BY vec_id ORDER BY dist, nid) AS rnk
-         |FROM d QUALIFY rnk <= 5 ORDER BY vec_id, rnk""".stripMargin,
-    "vs_knn_join" ->
-      s"""WITH d AS (
-         |  SELECT a.vec_id, b.vec_id AS nid,
-         |    round(1e-9 + ${dCosine("a.embedding", "b.embedding")}, 4) AS dist
-         |  FROM embeddings a, embeddings b WHERE a.vec_id <> b.vec_id)
-         |SELECT vec_id, nid, dist,
-         |  row_number() OVER (PARTITION BY vec_id ORDER BY dist, nid) AS rnk
-         |FROM d QUALIFY rnk <= 5 ORDER BY vec_id, rnk""".stripMargin,
+    "vs_knn_batch" -> knnBatchSql,
+    "vs_knn_join" -> knnBatchSql,
     "vs_knn_sql" -> knnSql(dCosine("embedding", "qv")),
     "vs_knn_postfilter" ->
       s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),

@@ -171,14 +171,28 @@ class AnnSpec extends AnyFunSuite {
     val queriesDf = Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val p = IvfIndex.searchBatch(spark, index, centroids, queriesDf, k = 5)
-      .queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    // the k-row centroid table is the broadcast side of the ranking
-    assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
-    assert(!p.contains("CartesianProduct"), p)
-    // probe selection + final top-k both via the bounded heap agg
-    assert("topk_by_dist".r.findAllIn(p).size >= 2, p)
+    val served = IvfIndex.searchBatch(spark, index, centroids, queriesDf, k = 5)
+    val p = served.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    val opt = served.queryExecution.optimizedPlan
+    import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    // probe ranking is one KnnJoin whose broadcast side is the k-row
+    // centroid table — no nested-loop or cartesian product of pair rows
+    val knn = opt.collect { case j: graft.plans.KnnJoinPlan => j }
+    assert(knn.size == 1, p)
+    assert(knn.head.right.output.map(_.name) == Seq("cid", "cvec"), p)
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    // exactly one bounded heap agg: the final per-query top-k
+    val topk = opt.collect { case a: Aggregate => a }
+      .filter(_.aggregateExpressions.exists(_.exists(_.isInstanceOf[graft.functions.TopKByDist])))
+    assert(topk.size == 1, p)
+    // the query payload rides the pair rows: no join keyed on qid
+    // (`vec_id <> qid` may sit in a join condition, but not as a key)
+    val qidKeys = opt.collect { case j: Join => j }
+      .flatMap(j => ExtractEquiJoinKeys.unapply(j).toSeq.flatMap(t => t._2 ++ t._3))
+      .filter(_.references.exists(_.name == "qid"))
+    assert(qidKeys.isEmpty, p)
   }
 
   test("target-accuracy calibration: nprobe meets target; target 1.0 reproduces exact") {
@@ -447,9 +461,9 @@ class AnnSpec extends AnyFunSuite {
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     def pairsAt(np: Int): Set[(Long, Long)] = {
       import org.apache.spark.sql.functions._
+      // probePairs carries the query payload (qv) on every pair row
       index.join(IvfIndex.probePairs(spark, sample, centroids, np), "centroid_id")
         .filter(col("qid") =!= col("vec_id"))
-        .join(sample, "qid")
         .select(col("qid"), col("vec_id"),
           graft.functions.SafeRound.round(
             graft.functions.FloatVecDistance.cosine(col("embedding"), col("qv")), 4)

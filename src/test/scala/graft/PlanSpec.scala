@@ -67,9 +67,18 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("batch knn broadcasts the index side (nested-loop on broadcast, no shuffle cartesian)") {
-    val p = plan(VectorSearch.knnBatch(spark, sf))
-    assert(p.contains("BroadcastNestedLoopJoin"), p)
-    assert(!p.contains("CartesianProduct"), p)
+    val df = VectorSearch.knnBatch(spark, sf)
+    val p = plan(df)
+    // one KnnJoin: the index side is broadcast inside the operator and
+    // each stream row loops over it with a bounded heap
+    val knn = df.queryExecution.sparkPlan.collect { case k: graft.plans.KnnJoinExec => k }
+    assert(knn.size == 1, p)
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    // no exchange ahead of the top-k: nothing is shuffled by key between
+    // scoring and the answer (the stream side's round-robin spread and
+    // the final orderBy's range exchange are the only exchanges)
+    assert(!p.contains("hashpartitioning"), p)
+    assert(!p.contains("topk_by_dist"), p)
   }
 
   test("q4-style EXISTS plans as a semi join") {
